@@ -12,10 +12,13 @@ Distributed layout:
     → per-row VAR forecast + residuals (numpy dot,
       B broadcast, Arrow batches)
     → sliding sequences over residuals              [window collect_list]
-    → network forward (mapInPandas, weights bcast)  [D8]
+    → network forward (mapInPandas, weights bcast)  [D8, ml/model.py]
     → compose + inverse-scale + clip, long form     [broadcast params join]
 
-Nothing ever collects to the driver except the m×m Gram cells.
+Nothing ever collects to the driver except the m×m Gram cells.  This
+module owns the composition; ml/var.py owns the VAR fit, ml/model.py
+the network and its scorer, ml/train.py the optimisation that
+``hybrid_train_eval`` adds on the same residual sequences.
 """
 
 from __future__ import annotations
@@ -43,7 +46,11 @@ _RESID_SCHEMA = T.StructType(
 
 
 def residual_frame(design: DataFrame, coeffs_bc) -> DataFrame:
-    """Per-row VAR one-step forecast and residual (vectorized per batch)."""
+    """Per-row VAR one-step forecast and residual (vectorized per batch).
+
+    Raises ValueError for a slice with design rows but no coefficients:
+    with fewer than p+1 train rows it has no complete-case train row, so
+    the VAR fit never saw it."""
 
     def score(batches):
         B_by_slice = coeffs_bc.value
@@ -52,8 +59,15 @@ def residual_frame(design: DataFrame, coeffs_bc) -> DataFrame:
                 continue
             frames = []
             for slice_name, g in pdf.groupby("slice"):
-                B = B_by_slice[slice_name]
                 X = np.asarray(list(g["x"]), dtype=np.float64)
+                if slice_name not in B_by_slice:
+                    p = (X.shape[1] - 1) // len(FEATURES)
+                    raise ValueError(
+                        f"slice {slice_name!r} has no VAR coefficients: it has "
+                        f"fewer than p+1 = {p + 1} train rows, so no complete-case "
+                        "train row to fit on"
+                    )
+                B = B_by_slice[slice_name]
                 Y = np.asarray(list(g["y"]), dtype=np.float64)
                 pred = X @ B
                 frames.append(

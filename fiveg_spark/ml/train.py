@@ -1,10 +1,11 @@
 """Distributed training of the hybrid residual network (SURVEY §2 D8/D9).
 
-Closes the last train.py parity gap (reference train.py:147-261:
-``build_model`` + Adam/Huber compile + fit): the repo previously shipped
-only the FORWARD pass (ml/model.py); this module adds exact reverse-mode
-gradients for the full architecture — GRN → GRU×2 → MHA → mean-pool →
-GRN → Dense — plus Adam and the Huber loss, all in numpy.
+Closes the reference's training path (train.py:147-261: ``build_model``
++ Adam/Huber compile + fit).  This module owns optimisation only: the
+Huber loss, Adam, ReduceLROnPlateau, dropout masks, the full-batch
+``fit`` loop and the per-slice Spark fit.  The network itself — sizes,
+weights, forward, exact reverse-mode backward and the scorer — lives in
+ml/model.py.
 
 Execution model (Spark-idiomatic for "many small models", the same shape
 as pandas-UDF model fitting in the MLlib docs):
@@ -15,8 +16,9 @@ as pandas-UDF model fitting in the MLlib docs):
     executors train the 3+ slices in parallel;
   - weights come back as ROWS (slice, param, shape, values) — bounded
     (~200k floats/slice), never a driver tensor during training;
-  - scoring broadcasts the collected weight pytree and reuses the
-    chunked mapInPandas forward.
+  - scoring broadcasts the collected weight pytrees to
+    ``model.predict_trained``, the same chunked mapInPandas scorer the
+    fixed-weight forecast uses.
 
 Gradient correctness is locked by a finite-difference pytest
 (tests/test_train.py) over every parameter of a tiny-dims model in
@@ -28,267 +30,20 @@ TF dtype.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-LN_EPS = 1e-3  # keras LayerNormalization default, as in ml/model.py
-
-
-@dataclass(frozen=True)
-class Dims:
-    """Architecture sizes (reference defaults, train.py:115-173)."""
-
-    k: int = 7
-    d1: int = 64  # GRN-1 units
-    u1: int = 128  # GRU-1 units
-    u2: int = 64  # GRU-2 units
-    heads: int = 4
-    kd: int = 32  # per-head key dim
-    d2: int = 32  # GRN-2 units
-
-
-def init_weights(dims: Dims, seed: int = 42, dtype=np.float32) -> dict[str, np.ndarray]:
-    """Glorot init, same layout/naming as ml/model.py:init_weights."""
-    rng = np.random.default_rng(seed)
-
-    def glorot(fan_in: int, fan_out: int) -> np.ndarray:
-        limit = np.sqrt(6.0 / (fan_in + fan_out))
-        return rng.uniform(-limit, limit, size=(fan_in, fan_out)).astype(dtype)
-
-    w: dict[str, np.ndarray] = {}
-
-    def grn(name: str, d_in: int, units: int) -> None:
-        w[f"{name}.elu_W"] = glorot(d_in, units)
-        w[f"{name}.elu_b"] = np.zeros(units, dtype)
-        w[f"{name}.lin_W"] = glorot(units, units)
-        w[f"{name}.lin_b"] = np.zeros(units, dtype)
-        w[f"{name}.gate_W"] = glorot(d_in, units)
-        w[f"{name}.gate_b"] = np.zeros(units, dtype)
-        if d_in != units:
-            w[f"{name}.skip_W"] = glorot(d_in, units)
-            w[f"{name}.skip_b"] = np.zeros(units, dtype)
-        w[f"{name}.ln_g"] = np.ones(units, dtype)
-        w[f"{name}.ln_b"] = np.zeros(units, dtype)
-
-    def gru(name: str, d_in: int, units: int) -> None:
-        w[f"{name}.Wx"] = glorot(d_in, 3 * units)
-        w[f"{name}.Wh"] = glorot(units, 3 * units)
-        w[f"{name}.b"] = np.zeros(3 * units, dtype)
-
-    grn("grn1", dims.k, dims.d1)
-    gru("gru1", dims.d1, dims.u1)
-    gru("gru2", dims.u1, dims.u2)
-    for proj in ("q", "k", "v"):
-        w[f"mha.{proj}_W"] = glorot(dims.u2, dims.heads * dims.kd)
-        w[f"mha.{proj}_b"] = np.zeros(dims.heads * dims.kd, dtype)
-    w["mha.out_W"] = glorot(dims.heads * dims.kd, dims.u2)
-    w["mha.out_b"] = np.zeros(dims.u2, dtype)
-    w["mha.ln_g"] = np.ones(dims.u2, dtype)
-    w["mha.ln_b"] = np.zeros(dims.u2, dtype)
-    grn("grn2", dims.u2, dims.d2)
-    w["head_W"] = glorot(dims.d2, dims.k)
-    w["head_b"] = np.zeros(dims.k, dtype)
-    return w
-
-
-# ---------------- primitive layers: forward w/ cache + backward ----------------
-
-
-def _elu(x):
-    return np.where(x > 0, x, np.expm1(np.minimum(x, 0.0)))
-
-
-def _sigmoid(x):
-    return 1.0 / (1.0 + np.exp(-np.clip(x, -60, 60)))
-
-
-def _ln_fwd(x, g, b):
-    mu = x.mean(axis=-1, keepdims=True)
-    var = x.var(axis=-1, keepdims=True)
-    inv = 1.0 / np.sqrt(var + LN_EPS)
-    xhat = (x - mu) * inv
-    return g * xhat + b, (xhat, inv, g)
-
-
-def _ln_bwd(dy, cache):
-    xhat, inv, g = cache
-    D = xhat.shape[-1]
-    dg = (dy * xhat).reshape(-1, D).sum(axis=0)
-    db = dy.reshape(-1, D).sum(axis=0)
-    dxhat = dy * g
-    dx = inv / D * (
-        D * dxhat
-        - dxhat.sum(axis=-1, keepdims=True)
-        - xhat * (dxhat * xhat).sum(axis=-1, keepdims=True)
-    )
-    return dx, dg, db
-
-
-def _grn_fwd(x, w, name, mask=None):
-    """x: (..., d_in) → (..., units).  Same math as ml/model.py:_grn.
-
-    ``mask`` is an inverted-dropout mask applied to the ELU activation
-    (reference GRN: Dropout between elu_dense and linear_dense,
-    train.py:140-142); None = inference-mode identity."""
-    has_skip = f"{name}.skip_W" in w
-    skip = x @ w[f"{name}.skip_W"] + w[f"{name}.skip_b"] if has_skip else x
-    a = x @ w[f"{name}.elu_W"] + w[f"{name}.elu_b"]
-    v1 = _elu(a)
-    if mask is not None:
-        v1 = v1 * mask  # post-mask activation feeds lin_W fwd AND grad
-    v2 = v1 @ w[f"{name}.lin_W"] + w[f"{name}.lin_b"]
-    gi = x @ w[f"{name}.gate_W"] + w[f"{name}.gate_b"]
-    s = _sigmoid(gi)
-    out, ln_cache = _ln_fwd(skip + v2 * s, w[f"{name}.ln_g"], w[f"{name}.ln_b"])
-    return out, (x, a, v1, v2, s, has_skip, ln_cache, mask)
-
-
-def _grn_bwd(dout, cache, w, name, grads):
-    x, a, v1, v2, s, has_skip, ln_cache, mask = cache
-    d_in = x.shape[-1]
-    units = v2.shape[-1]
-    dpre, dg, db = _ln_bwd(dout, ln_cache)
-    grads[f"{name}.ln_g"] = dg
-    grads[f"{name}.ln_b"] = db
-    x2 = x.reshape(-1, d_in)
-    dskip = dpre
-    dv2 = dpre * s
-    ds = dpre * v2
-    dgi = ds * s * (1.0 - s)
-    grads[f"{name}.lin_W"] = v1.reshape(-1, units).T @ dv2.reshape(-1, units)
-    grads[f"{name}.lin_b"] = dv2.reshape(-1, units).sum(axis=0)
-    dv1 = dv2 @ w[f"{name}.lin_W"].T
-    if mask is not None:
-        dv1 = dv1 * mask  # chain through the dropout scaling
-    da = dv1 * np.where(a > 0, 1.0, np.exp(np.minimum(a, 0.0)))
-    grads[f"{name}.elu_W"] = x2.T @ da.reshape(-1, units)
-    grads[f"{name}.elu_b"] = da.reshape(-1, units).sum(axis=0)
-    grads[f"{name}.gate_W"] = x2.T @ dgi.reshape(-1, units)
-    grads[f"{name}.gate_b"] = dgi.reshape(-1, units).sum(axis=0)
-    dx = da @ w[f"{name}.elu_W"].T + dgi @ w[f"{name}.gate_W"].T
-    if has_skip:
-        grads[f"{name}.skip_W"] = x2.T @ dskip.reshape(-1, units)
-        grads[f"{name}.skip_b"] = dskip.reshape(-1, units).sum(axis=0)
-        dx = dx + dskip @ w[f"{name}.skip_W"].T
-    else:
-        dx = dx + dskip
-    return dx
-
-
-def _gru_fwd(x, w, name):
-    """x: (B, T, d_in) → (B, T, units); caches every gate for BPTT."""
-    B, T_, _ = x.shape
-    units = w[f"{name}.Wh"].shape[0]
-    Wx, Wh, b = w[f"{name}.Wx"], w[f"{name}.Wh"], w[f"{name}.b"]
-    h = np.zeros((B, units), dtype=x.dtype)
-    H = np.empty((B, T_, units), dtype=x.dtype)
-    Hprev = np.empty((B, T_, units), dtype=x.dtype)
-    Z = np.empty_like(H)
-    R = np.empty_like(H)
-    HH = np.empty_like(H)
-    GHh = np.empty_like(H)  # the h-gate slice of h_prev @ Wh
-    for t in range(T_):
-        Hprev[:, t] = h
-        gx = x[:, t] @ Wx + b
-        gh = h @ Wh
-        z = _sigmoid(gx[:, :units] + gh[:, :units])
-        r = _sigmoid(gx[:, units : 2 * units] + gh[:, units : 2 * units])
-        ghh = gh[:, 2 * units :]
-        hh = np.tanh(gx[:, 2 * units :] + r * ghh)
-        h = z * h + (1.0 - z) * hh
-        Z[:, t], R[:, t], HH[:, t], GHh[:, t], H[:, t] = z, r, hh, ghh, h
-    return H, (x, Hprev, Z, R, HH, GHh)
-
-
-def _gru_bwd(dH, cache, w, name, grads):
-    x, Hprev, Z, R, HH, GHh = cache
-    B, T_, d_in = x.shape
-    units = Z.shape[-1]
-    Wx, Wh = w[f"{name}.Wx"], w[f"{name}.Wh"]
-    dWx = np.zeros_like(Wx)
-    dWh = np.zeros_like(Wh)
-    db = np.zeros(3 * units, dtype=Wx.dtype)
-    dx = np.empty_like(x)
-    dh = np.zeros((B, units), dtype=x.dtype)
-    for t in range(T_ - 1, -1, -1):
-        dht = dH[:, t] + dh
-        z, r, hh, ghh, hp = Z[:, t], R[:, t], HH[:, t], GHh[:, t], Hprev[:, t]
-        dz = dht * (hp - hh)
-        dhh = dht * (1.0 - z)
-        dh = dht * z
-        dhh_pre = dhh * (1.0 - hh * hh)
-        dr = dhh_pre * ghh
-        dz_pre = dz * z * (1.0 - z)
-        dr_pre = dr * r * (1.0 - r)
-        dgx = np.concatenate([dz_pre, dr_pre, dhh_pre], axis=1)
-        dgh = np.concatenate([dz_pre, dr_pre, dhh_pre * r], axis=1)
-        dWx += x[:, t].T @ dgx
-        dWh += hp.T @ dgh
-        db += dgx.sum(axis=0)
-        dx[:, t] = dgx @ Wx.T
-        dh = dh + dgh @ Wh.T
-    grads[f"{name}.Wx"] = dWx
-    grads[f"{name}.Wh"] = dWh
-    grads[f"{name}.b"] = db
-    return dx
-
-
-def _mha_fwd(x, w, dims: Dims):
-    B, T_, d = x.shape
-    H, kd = dims.heads, dims.kd
-    scale = 1.0 / np.sqrt(kd)
-
-    def proj(name):
-        p = x @ w[f"mha.{name}_W"] + w[f"mha.{name}_b"]
-        return p.reshape(B, T_, H, kd).transpose(0, 2, 1, 3).reshape(B * H, T_, kd)
-
-    q3, k3, v3 = proj("q"), proj("k"), proj("v")
-    scores = (q3 @ k3.transpose(0, 2, 1)) * np.asarray(scale, dtype=x.dtype)
-    scores = scores - scores.max(axis=-1, keepdims=True)
-    att = np.exp(scores)
-    att = att / att.sum(axis=-1, keepdims=True)
-    ctx3 = att @ v3  # (B*H, T, kd)
-    ctx = ctx3.reshape(B, H, T_, kd).transpose(0, 2, 1, 3).reshape(B, T_, H * kd)
-    out = ctx @ w["mha.out_W"] + w["mha.out_b"]
-    y, ln_cache = _ln_fwd(x + out, w["mha.ln_g"], w["mha.ln_b"])
-    return y, (x, q3, k3, v3, att, ctx, ln_cache)
-
-
-def _mha_bwd(dy, cache, w, dims: Dims, grads):
-    x, q3, k3, v3, att, ctx, ln_cache = cache
-    B, T_, d = x.shape
-    H, kd = dims.heads, dims.kd
-    scale = 1.0 / np.sqrt(kd)
-    dpre, dg, db = _ln_bwd(dy, ln_cache)
-    grads["mha.ln_g"] = dg
-    grads["mha.ln_b"] = db
-    dx = dpre.copy()  # residual branch
-    dout = dpre
-    grads["mha.out_W"] = ctx.reshape(-1, H * kd).T @ dout.reshape(-1, d)
-    grads["mha.out_b"] = dout.reshape(-1, d).sum(axis=0)
-    dctx = (dout @ w["mha.out_W"].T).reshape(B, T_, H, kd).transpose(0, 2, 1, 3)
-    dctx3 = dctx.reshape(B * H, T_, kd)
-    datt = dctx3 @ v3.transpose(0, 2, 1)
-    dv3 = att.transpose(0, 2, 1) @ dctx3
-    dscores = att * (datt - (datt * att).sum(axis=-1, keepdims=True))
-    dq3 = (dscores @ k3) * np.asarray(scale, dtype=x.dtype)
-    dk3 = (dscores.transpose(0, 2, 1) @ q3) * np.asarray(scale, dtype=x.dtype)
-
-    def unproj(d3, name):
-        flat = (
-            d3.reshape(B, H, T_, kd).transpose(0, 2, 1, 3).reshape(-1, H * kd)
-        )
-        grads[f"mha.{name}_W"] = x.reshape(-1, d).T @ flat
-        grads[f"mha.{name}_b"] = flat.sum(axis=0)
-        return (flat @ w[f"mha.{name}_W"].T).reshape(B, T_, d)
-
-    dx += unproj(dq3, "q") + unproj(dk3, "k") + unproj(dv3, "v")
-    return dx
+from fiveg_spark.ml.model import (
+    Dims,
+    backward,
+    forward,
+    init_weights,
+    predict_trained,
+    stack_sequences,
+)
 
 
 def make_dropout_masks(
@@ -316,39 +71,6 @@ def make_dropout_masks(
         "gru2_in": keep(p_gru, (B, 1, dims.u1)),
         "grn2": keep(p_grn, (B, dims.d2)),
     }
-
-
-def forward(X, w, dims: Dims, masks=None):
-    """(B, T, k) → (B, k); returns (pred, caches) for backward.
-    ``masks`` (from make_dropout_masks) enables training-mode dropout;
-    None = deterministic inference forward."""
-    g1, c_g1 = _grn_fwd(X, w, "grn1", mask=masks and masks.get("grn1"))
-    g1_in = g1 * masks["gru1_in"] if masks else g1
-    h1, c_r1 = _gru_fwd(g1_in, w, "gru1")
-    h1_in = h1 * masks["gru2_in"] if masks else h1
-    h2, c_r2 = _gru_fwd(h1_in, w, "gru2")
-    m, c_m = _mha_fwd(h2, w, dims)
-    pooled = m.mean(axis=1)
-    g2, c_g2 = _grn_fwd(pooled, w, "grn2", mask=masks and masks.get("grn2"))
-    pred = g2 @ w["head_W"] + w["head_b"]
-    return pred, (c_g1, c_r1, c_r2, c_m, c_g2, m.shape[1], g2, masks)
-
-
-def backward(dpred, caches, w, dims: Dims):
-    c_g1, c_r1, c_r2, c_m, c_g2, T_, g2, masks = caches
-    grads: dict[str, np.ndarray] = {}
-    grads["head_W"] = g2.T @ dpred
-    grads["head_b"] = dpred.sum(axis=0)
-    dg2 = dpred @ w["head_W"].T
-    dpool = _grn_bwd(dg2, c_g2, w, "grn2", grads)
-    dm = np.repeat(dpool[:, None, :], T_, axis=1) / T_
-    dh2 = _mha_bwd(dm, c_m, w, dims, grads)
-    dh1_in = _gru_bwd(dh2, c_r2, w, "gru2", grads)
-    dh1 = dh1_in * masks["gru2_in"] if masks else dh1_in
-    dg1_in = _gru_bwd(dh1, c_r1, w, "gru1", grads)
-    dg1 = dg1_in * masks["gru1_in"] if masks else dg1_in
-    dX = _grn_bwd(dg1, c_g1, w, "grn1", grads)
-    return grads, dX
 
 
 def huber_loss_grad(pred, Y, delta: float = 1.0):
@@ -463,14 +185,14 @@ def fit(
             if dropout
             else None
         )
-        pred, caches = forward(X, w, dims, masks=masks)
+        pred, caches = forward(X, w, dims, masks=masks, _cache=True)
         loss, dpred = huber_loss_grad(pred, Y, delta)
         grads, _ = backward(dpred.astype(dtype), caches, w, dims)
         adam_step(w, grads, m, v, epoch, lr=cur_lr)
         losses.append(loss)
         monitored = loss
         if X_val is not None and len(X_val):
-            vp, _ = forward(np.asarray(X_val, dtype=dtype), w, dims)
+            vp = forward(np.asarray(X_val, dtype=dtype), w, dims)
             vl, _ = huber_loss_grad(vp, np.asarray(Y_val, dtype=dtype), delta)
             monitored = vl
             if vl < best_val:
@@ -514,21 +236,14 @@ def train_residual_models(
         pdf = pdf.sort_values("window_start")
 
         def stack(g: pd.DataFrame):
-            X = np.stack(
-                [np.stack([np.asarray(r, dtype=np.float32) for r in s]) for s in g["seq"]]
-            )
             Y = np.stack([np.asarray(t, dtype=np.float32) for t in g["target"]])
-            return X, Y
+            return stack_sequences(g["seq"]), Y
 
         train_pdf = pdf[pdf["split"] == "train"]
         if len(train_pdf) == 0:
             # a slice whose sequences all fall in val (short/late series)
             # has nothing to fit — emit no model; scoring skips it
-            return pd.DataFrame(
-                {c: pd.Series(dtype=t) for c, t in
-                 [("slice", "object"), ("param", "object"),
-                  ("shape", "object"), ("values", "object")]}
-            )
+            return pd.DataFrame(columns=_WEIGHTS_SCHEMA.fieldNames())
         X, Y = stack(train_pdf)
         val = pdf[pdf["split"] == "val"]
         X_val, Y_val = stack(val) if len(val) else (None, None)
@@ -549,6 +264,9 @@ def train_residual_models(
             Y_val=None if Y_val is None else (Y_val - mu) / sd,
             dropout=dropout,
         )
+        # the loss curve and the target normalisation ride along as
+        # pseudo-params (collect_weights splits __loss__ back out)
+        extras = (("__loss__", np.asarray(losses)), ("__mu__", mu), ("__sd__", sd))
         rows = [
             {
                 "slice": slice_name,
@@ -556,25 +274,8 @@ def train_residual_models(
                 "shape": list(v.shape),
                 "values": v.astype(np.float64).reshape(-1).tolist(),
             }
-            for k, v in w.items()
+            for k, v in (*w.items(), *extras)
         ]
-        rows.append(
-            {
-                "slice": slice_name,
-                "param": "__loss__",
-                "shape": [len(losses)],
-                "values": [float(x) for x in losses],
-            }
-        )
-        for pname, arr in (("__mu__", mu), ("__sd__", sd)):
-            rows.append(
-                {
-                    "slice": slice_name,
-                    "param": pname,
-                    "shape": [len(arr)],
-                    "values": arr.astype(np.float64).tolist(),
-                }
-            )
         return pd.DataFrame(rows)
 
     train = sequences.filter(F.col("split").isin("train", "val")).select(
@@ -599,65 +300,6 @@ def collect_weights(weight_rows: DataFrame):
     return by_slice, losses
 
 
-def _norm_split(w: dict[str, np.ndarray]):
-    """Split the weight pytree from its (mu, sd) normalization params."""
-    mu = w.get("__mu__", None)
-    sd = w.get("__sd__", None)
-    net = {k: v for k, v in w.items() if not k.startswith("__")}
-    return net, mu, sd
-
-
-_PRED_SCHEMA = T.StructType(
-    [
-        T.StructField("slice", T.StringType()),
-        T.StructField("window_start", T.TimestampType()),
-        T.StructField("split", T.StringType()),
-        T.StructField("target", T.ArrayType(T.DoubleType())),
-        T.StructField("resid_pred", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-_CHUNK = 128  # same peak-memory bound as ml/model.py:CHUNK
-
-
-def predict_trained(sequences: DataFrame, weights_bc, dims: Dims) -> DataFrame:
-    """mapInPandas scoring with PER-SLICE trained weights."""
-
-    def score(batches):
-        by_slice = weights_bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for slice_name, g in pdf.groupby("slice"):
-                if slice_name not in by_slice:
-                    continue  # no trained model for this slice (no train rows)
-                net, mu, sd = _norm_split(by_slice[slice_name])
-                for lo in range(0, len(g), _CHUNK):
-                    part = g.iloc[lo : lo + _CHUNK]
-                    X = np.stack(
-                        [
-                            np.stack([np.asarray(r, dtype=np.float32) for r in s])
-                            for s in part["seq"]
-                        ]
-                    )
-                    if mu is not None:
-                        X = (X - mu) / sd
-                    pred, _ = forward(X, net, dims)
-                    if mu is not None:
-                        pred = pred * sd + mu
-                    yield pd.DataFrame(
-                        {
-                            "slice": part["slice"].values,
-                            "window_start": part["window_start"].values,
-                            "split": part["split"].values,
-                            "target": [list(map(float, t)) for t in part["target"]],
-                            "resid_pred": [p.astype(np.float64).tolist() for p in pred],
-                        }
-                    )
-
-    return sequences.mapInPandas(score, schema=_PRED_SCHEMA)
-
-
 def hybrid_train_eval(
     spark,
     sf_dir: str,
@@ -675,10 +317,9 @@ def hybrid_train_eval(
     contract (iterative optimization is not SQL); the pytest gate asserts
     loss decreases and the trained hybrid beats VAR-only.
     """
-    from fiveg_spark.ml.features import FEATURES
     from fiveg_spark.ml.hybrid import residual_pipeline
 
-    dims = Dims(k=len(FEATURES))
+    dims = Dims()
     resid, sequences, _params = residual_pipeline(spark, sf_dir, p=p, window=window)
     # the sequence frame feeds BOTH the training collect and the scoring
     # pass; without a persist the whole Python-heavy lineage (events scan

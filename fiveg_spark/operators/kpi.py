@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fiveg_spark.functions.stats import pop_kurtosis_sql, pop_skewness_sql
+from fiveg_spark.plans import registry
 from fiveg_spark.sources.tables import load_table
 
 EPS = 1e-6
@@ -113,19 +114,9 @@ def _cnt(expr: str, alias: str) -> str:
 
 
 def _distinct_cnt(col: str, alias: str, dialect: str) -> str:
-    """Exact distinct count.  Spark plans multiple count(DISTINCT x)
-    aggregates via an Expand that replicates every input row once per
-    distinct column (+1 for the plain aggregates) — a 5x row blow-up
-    through the first aggregate at 100 TB (r13 verdict item 6).
-    size(collect_set(x)) computes the same exact count in ONE pass with
-    map-side partial sets and no Expand: collect_set drops NULLs and
-    dedups exactly like count(DISTINCT), and size() of the merged set
-    is the same integer on every engine run (set order never matters).
-    DuckDB keeps the literal count(DISTINCT) — same value, and the
-    oracle text stays the obvious spelling."""
-    if dialect == "spark":
-        return _cnt(f"size(collect_set({col}))", alias)
-    return _cnt(f"count(DISTINCT {col})", alias)
+    """Exact distinct count, Expand-free on Spark (see
+    registry.distinct_cnt); DuckDB keeps count(DISTINCT)."""
+    return _cnt(registry.distinct_cnt(col, dialect), alias)
 
 
 def kpi_aggregates(

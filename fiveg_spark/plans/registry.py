@@ -16,7 +16,6 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 from fiveg_spark.sources.tables import load_table
 
@@ -74,51 +73,31 @@ def sql_backed(
     return Query(name=name, run=run, oracle=sql_fn("duckdb"), deferred=deferred)
 
 
-# session → {rel: persisted part frame} for the MOST RECENT run_parts
-# call (persist mode).  Unpersisting every live part before each call
-# guarantees a re-run recomputes from the parquet inputs — the cache
-# only ever shares work WITHIN one query execution (the ≥2-consumer
-# rule), never across bench iterations or across queries.  Weak keys:
-# a stopped/GC'd session drops its entries.
-_LIVE_PARTS: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
+PARTS_MODES = ("checkpoint", "inline")
 
 
-def parts_mode() -> str:
-    """Part execution mode (env-switchable so modes can be interleaved
-    for A/B in one session):
+def parts_mode(default: str = "checkpoint") -> str:
+    """Part execution mode: ``SPARK_GRAFT_PARTS`` if set (so modes can
+    be interleaved for A/B in one session), else the query's default:
     'checkpoint' (default): eager localCheckpoint per part — computes
       the part to completion before the tail plans, so tail references
       can never recompute it.
-    'persist': LAZY persist (MEMORY_AND_DISK) — no separate job
-      barrier, the tail's first job populates the cache.  Measured
-      SLOWER on multi-reference parts (concurrent tail stages race to
-      build the cache and recompute the part subtree, ute 1.0→3.0 s);
-      kept for the A/B record.
-    'persist_eager': persist + a count() trigger — job barrier kept,
-      but the tail reads columnar cached batches instead of the
-      checkpoint's row RDD.
-
     'inline': no materialization at all — plain temp views, the tail
       re-inlines the part subtree per reference.
 
-    The r14 interleaved A/B (tools/ab_parts.py + ad-hoc 3-mode runs,
-    5-7 reps x 4 sessions, sf0.1/local[32]) settled the default:
-    'checkpoint' stays.  Lazy persist LOSES on multi-reference parts
-    (user_transfer_entropy 0.8 → 2.4-3.0 s, vocab_jaccard_matrix
-    0.4 → 0.7-0.8 s) and persist_eager loses everywhere it differs.
-    A structural caveat explains part of it: CacheManager plan
-    substitution never fires for a part whose SQL opens with its own
-    WITH chain (the view-embedded copy renumbers CTERelationDef ids, so
-    the canonicalized plans don't match) — for those parts 'persist'
-    degenerates to 'inline' plus an unused cache entry.  A query opts
-    into 'inline' via materialized_backed(mode=...) only on a
-    repeatable measured win where the re-inlined shape is ALSO the
+    A query opts into 'inline' via materialized_backed(mode=...) only on
+    a repeatable measured win where the re-inlined shape is ALSO the
     scale-correct one (substring_dedup: exploded part bigger than its
-    input, 2 references — 7-rep medians 0.671 checkpoint / 0.489
-    persist / 0.474 inline)."""
-    return os.environ.get("SPARK_GRAFT_PARTS", "")
+    input, 2 references — 7-rep medians 0.671 s checkpoint / 0.474 s
+    inline, sf0.1/local[32]).  Lazy and eager persist were measured in
+    the same interleaved A/B and lost everywhere they differed."""
+    mode = os.environ.get("SPARK_GRAFT_PARTS") or default
+    if mode not in PARTS_MODES:
+        raise ValueError(
+            f"parts mode {mode!r} (SPARK_GRAFT_PARTS or a query default): "
+            f"expected one of {', '.join(PARTS_MODES)}"
+        )
+    return mode
 
 
 def run_parts(spark: SparkSession, parts_fn, default_mode: str = "checkpoint") -> DataFrame:
@@ -126,32 +105,15 @@ def run_parts(spark: SparkSession, parts_fn, default_mode: str = "checkpoint") -
     are currently registered (tests point the base tables at synthetic
     frames first)."""
     ctes, tail = parts_fn("spark")
-    # drop any still-persisted parts from the previous run_parts call
-    # FIRST, in both modes: a re-run (bench rep, A/B arm) must recompute
-    # from the inputs, never read a cache the prior call left behind
-    live = _LIVE_PARTS.setdefault(spark, {})
-    for prev in live.values():
-        prev.unpersist()
-    live.clear()
-    mode = parts_mode() or default_mode
-    if not ctes or mode == "checkpoint":
-        for rel, sql in ctes:
-            spark.sql(sql).localCheckpoint().createOrReplaceTempView(rel)
-        return spark.sql(tail)
-    if mode == "inline":
-        # plain temp views: the tail re-inlines the part subtree per
-        # reference.  Cheaper than any materialization when the part is
-        # small and referenced exactly twice in one stage chain.
-        for rel, sql in ctes:
-            spark.sql(sql).createOrReplaceTempView(rel)
-        return spark.sql(tail)
-    eager = mode == "persist_eager"
+    mode = parts_mode(default_mode)
     for rel, sql in ctes:
-        df = spark.sql(sql).persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            df.count()  # populate the cache before the tail plans
+        df = spark.sql(sql)
+        if mode == "checkpoint":
+            df = df.localCheckpoint()
+        # 'inline': a plain temp view, the tail re-inlines the part per
+        # reference — cheaper than any materialization when the part is
+        # small and referenced exactly twice in one stage chain
         df.createOrReplaceTempView(rel)
-        live[rel] = df
     return spark.sql(tail)
 
 

@@ -93,6 +93,35 @@ def test_spark_forward_matches_local_numpy(spark, scaled):
         )
 
 
+@pytest.mark.parametrize(
+    "name", ["sequence_counts", "gru_forward_cert", "hybrid_forecast_cert"]
+)
+def test_ml_queries_match_oracle(name, spark, duck):
+    """The default run's oracle check for ml/: the window, forward and
+    hybrid-forecast queries against their DuckDB oracles at sf0.001."""
+    from tests.test_oracle_parity import assert_oracle_parity
+
+    assert_oracle_parity(name, spark, duck)
+
+
+def test_short_slice_fails_with_named_value_error(spark, tmp_path):
+    """A slice with too little history to fit VAR coefficients stops the
+    hybrid forecast with an error that names it, not a bare KeyError."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    urllc = events["user_id"].to_numpy() % 3 == 1
+    hour = events["ts"].to_numpy().astype("datetime64[h]")
+    # 4 hourly rows: lags (p=3) leave one complete-case row, in test
+    kept_hours = np.unique(hour[urllc])[:4]
+    keep = ~urllc | np.isin(hour, kept_hours)
+    pq.write_table(events.filter(pa.array(keep)), tmp_path / "events.parquet")
+
+    with pytest.raises(Exception, match=r"ValueError: slice 'URLLC' has no VAR coefficients"):
+        hybrid_eval(spark, str(tmp_path)).collect()
+
+
 def test_hybrid_eval_surface(spark):
     df = hybrid_eval(spark, SF_DIR, p=2, window=12)
     rows = df.collect()

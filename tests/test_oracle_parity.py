@@ -57,6 +57,12 @@ def _rows(colnames, rows):
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_oracle_parity(name, spark, duck):
+    assert_oracle_parity(name, spark, duck)
+
+
+def assert_oracle_parity(name, spark, duck):
+    """One contract query against its DuckDB oracle: schema, row count
+    and order-insensitive values."""
     sdf = QUERIES[name](spark, SF_DIR)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]

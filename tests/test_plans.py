@@ -451,3 +451,18 @@ def test_table_health_flags_small_file_sprawl(spark, tmp_path):
     # empty dir: total, not a crash
     h4 = audit_table(str(tmp_path / "nothing"))
     assert h4.n_files == 0 and h4.recommend_compaction is False
+
+
+def test_mistyped_parts_mode_raises(monkeypatch):
+    """SPARK_GRAFT_PARTS takes checkpoint|inline; a typo must not pick
+    some other execution mode silently."""
+    from fiveg_spark.plans.registry import parts_mode
+
+    monkeypatch.delenv("SPARK_GRAFT_PARTS", raising=False)
+    assert parts_mode() == "checkpoint"
+    assert parts_mode("inline") == "inline"
+    monkeypatch.setenv("SPARK_GRAFT_PARTS", "inline")
+    assert parts_mode() == "inline"
+    monkeypatch.setenv("SPARK_GRAFT_PARTS", "inlne")
+    with pytest.raises(ValueError, match="'inlne'"):
+        parts_mode()

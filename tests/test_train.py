@@ -12,20 +12,14 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from fiveg_spark.ml.train import (
-    Dims,
-    backward,
-    fit,
-    forward,
-    huber_loss_grad,
-    init_weights,
-)
+from fiveg_spark.ml.model import Dims, backward, forward, init_weights
+from fiveg_spark.ml.train import fit, huber_loss_grad
 
 TINY = Dims(k=3, d1=4, u1=5, u2=4, heads=2, kd=3, d2=4)
 
 
 def _loss(X, Y, w, dims):
-    pred, _ = forward(X, w, dims)
+    pred = forward(X, w, dims)
     loss, _ = huber_loss_grad(pred, Y, delta=0.35)
     return loss
 
@@ -38,7 +32,7 @@ def test_gradients_match_finite_differences():
     Y = rng.normal(scale=1.5, size=(B, TINY.k)).astype(np.float64)
     w = init_weights(TINY, seed=3, dtype=np.float64)
 
-    pred, caches = forward(X, w, TINY)
+    pred, caches = forward(X, w, TINY, _cache=True)
     _, dpred = huber_loss_grad(pred, Y, delta=0.35)
     grads, _ = backward(dpred, caches, w, TINY)
 
@@ -59,6 +53,30 @@ def test_gradients_match_finite_differences():
             num = (up - dn) / (2 * eps)
             err = abs(num - gflat[i]) / max(1e-8, abs(num) + abs(gflat[i]))
             assert err < 1e-5, f"{name}[{i}]: analytic {gflat[i]:.3e} vs numeric {num:.3e}"
+
+
+@pytest.mark.parametrize(
+    "dims, dtype", [(TINY, np.float64), (Dims(), np.float32)], ids=["tiny-f64", "default-f32"]
+)
+def test_inference_forward_matches_caching_forward(dims, dtype):
+    """The cache-free inference forward and the training forward that
+    keeps every activation for backward compute the same prediction."""
+    X = np.random.default_rng(5).normal(size=(16, 12, dims.k)).astype(dtype)
+    w = init_weights(dims, seed=9, dtype=dtype)
+    pred, caches = forward(X, w, dims, _cache=True)
+    assert caches is not None
+    np.testing.assert_array_equal(forward(X, w, dims), pred)
+
+
+def test_forward_runs_in_the_weights_dtype():
+    """A float64 input to float32 weights is cast once, up front: the
+    whole pass (and its output) stays float32."""
+    X = np.random.default_rng(6).normal(size=(8, 12, 7))
+    assert X.dtype == np.float64
+    w = init_weights()
+    pred = forward(X, w)
+    assert pred.dtype == np.float32
+    np.testing.assert_array_equal(pred, forward(X.astype(np.float32), w))
 
 
 def test_fit_reduces_loss_on_learnable_signal():
@@ -102,11 +120,10 @@ def test_weight_save_load_round_trip(spark, tmp_path):
     import numpy as np
 
     from fiveg_spark.ml.hybrid import residual_pipeline
+    from fiveg_spark.ml.model import predict_trained
     from fiveg_spark.ml.train import (
-        Dims,
         collect_weights,
         load_weights,
-        predict_trained,
         save_weights,
         train_residual_models,
     )
@@ -150,10 +167,10 @@ def test_gradients_match_finite_differences_with_dropout():
     )
 
     def loss_at(w):
-        pred, _ = forward(X, w, TINY, masks=masks)
+        pred = forward(X, w, TINY, masks=masks)
         return huber_loss_grad(pred, Y, delta=0.35)[0]
 
-    pred, caches = forward(X, w, TINY, masks=masks)
+    pred, caches = forward(X, w, TINY, masks=masks, _cache=True)
     _, dpred = huber_loss_grad(pred, Y, delta=0.35)
     grads, _ = backward(dpred, caches, w, TINY)
 

@@ -7,7 +7,12 @@ pipeline operators (dedup, similarity search, text analysis, multimodal
 columns).  See SURVEY.md for the operator inventory.
 """
 
+from fiveg_spark import zipguard
 from fiveg_spark.session import get_spark
+
+# first import in a Python worker: later tasks skip re-parsing the jar
+# and pyspark.zip directories (see zipguard)
+zipguard.install()
 
 __all__ = ["get_spark"]
 __version__ = "0.5.0"

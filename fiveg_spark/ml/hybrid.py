@@ -6,7 +6,7 @@ network, final_pred = var_pred + resid_pred, inverse RobustScaler,
 clip at 0.
 
 Distributed layout:
-  scaled frame (hourly, tiny)                       [1 shuffle: events agg]
+  hourly frame (tiny, checkpointed) → scaled       [1 shuffle: events agg]
     → lag design via window functions               [reuses series order]
     → VAR fit: partial Gram mapInPandas + solve     [tiny shuffle, D6]
     → per-row VAR forecast + residuals (numpy dot,
@@ -93,13 +93,17 @@ def residual_pipeline(
     """Shared front half of the hybrid: scaled hourly features → VAR fit
     on the train split → per-row residuals → sliding residual sequences.
     Returns (resid, sequences, scaler_params)."""
-    scaled, params = robust_scale(feature_frame(spark, sf_dir))
+    # the hourly frame is the one events aggregation of a call: the
+    # scaler params (also broadcast into the forecast's inverse scale)
+    # and the scaled design both read this checkpoint, so no later
+    # plan scans events again.  It is tiny (~2k rows/slice), so the
+    # checkpoint is effectively free.
+    hourly = feature_frame(spark, sf_dir).localCheckpoint()
+    scaled, params = robust_scale(hourly)
     # localCheckpoint both shared frames: design feeds the Gram solve
     # AND the residual scorer, resid feeds the sequence window AND the
     # var_pred join downstream — without materialization each reference
-    # re-runs the events aggregation + scaling pipeline (advisor
-    # repeated-scan). The hourly frame is tiny (~2k rows/slice), so the
-    # checkpoint is effectively free.
+    # re-runs the scaling and lag windows (advisor repeated-scan).
     design = lag_design(scaled, p=p).localCheckpoint()
     coeffs = solve_coefficients(
         normal_equations(design.filter(F.col("split") == "train"))
@@ -129,7 +133,12 @@ def hybrid_forecast(
     the conformal calibrator takes ("val", "test") so the radius fits on
     val and coverage measures on test."""
     resid, sequences, params = residual_pipeline(spark, sf_dir, p=p, window=window)
-    preds = predict_residuals(sequences, spark.sparkContext.broadcast(init_weights()))
+    # filter BEFORE the forward pass (it cannot push below mapInPandas):
+    # only the kept eras are worth scoring
+    preds = predict_residuals(
+        sequences.filter(F.col("split").isin(*splits)),
+        spark.sparkContext.broadcast(init_weights()),
+    )
 
     # final = var_pred + resid_pred, then inverse-scale + clip (train.py:256-261)
     composed = (
@@ -137,7 +146,6 @@ def hybrid_forecast(
             resid.select("slice", "window_start", "var_pred"),
             ["slice", "window_start"],
         )
-        .filter(F.col("split").isin(*splits))
         .select(
             "slice",
             "window_start",

@@ -312,19 +312,22 @@ def hybrid_train_eval(
 
     Pipeline: residual sequences (shared with hybrid_forecast) → per-slice
     applyInPandas Adam fit on the TRAIN split → broadcast weights →
-    score ALL rows → per-slice TEST-split RMSE of (VAR + trained resid)
-    vs VAR alone, plus first/last training loss.  Rows-only in the
-    contract (iterative optimization is not SQL); the pytest gate asserts
-    loss decreases and the trained hybrid beats VAR-only.
+    score the TEST split → per-slice and pooled ('ALL') RMSE of (VAR +
+    trained resid) vs VAR alone, plus first/last training loss.
+    Rows-only in the contract (iterative optimization is not SQL); the
+    pytest gate asserts loss decreases and the trained hybrid beats
+    VAR-only.
     """
     from fiveg_spark.ml.hybrid import residual_pipeline
 
     dims = Dims()
     resid, sequences, _params = residual_pipeline(spark, sf_dir, p=p, window=window)
     # the sequence frame feeds BOTH the training collect and the scoring
-    # pass; without a persist the whole Python-heavy lineage (events scan
-    # → hourly agg → VAR residuals → window collect_list) re-executes
-    sequences = sequences.persist()
+    # pass; without materializing it the window collect_list re-executes.
+    # A lazy local checkpoint fills on the training job and, unlike a
+    # persist, pins nothing in the cache manager: the context cleaner
+    # reclaims its blocks once the returned frame is dropped
+    sequences = sequences.localCheckpoint(eager=False)
     weight_rows = train_residual_models(sequences, dims, epochs=epochs, lr=lr)
     by_slice, losses = collect_weights(weight_rows)
     bc = spark.sparkContext.broadcast(by_slice)
@@ -341,7 +344,7 @@ def hybrid_train_eval(
 
     # scaled-space errors: VAR-only error IS the residual target;
     # hybrid error = target - resid_pred
-    errs = preds.filter(F.col("split") == "test").select(
+    errs = preds.select(
         "slice",
         F.expr(
             "aggregate(zip_with(target, resid_pred, (t, p) -> (t - p) * (t - p)),"
@@ -351,30 +354,20 @@ def hybrid_train_eval(
         F.size("target").alias("k"),
     )
 
-    def rollup(grouped):
-        return grouped.agg(
+    # one rollup: the per-slice rows and the pooled NULL-slice row (the
+    # single-number "does training pay for itself" answer, shown as
+    # 'ALL') share one scan of the scored test split
+    return (
+        errs.rollup("slice")
+        .agg(
             F.count("*").alias("n_test"),
             F.round(F.sqrt(F.sum("se_hybrid") / F.sum(F.col("k"))), 4).alias(
                 "rmse_hybrid"
             ),
             F.round(F.sqrt(F.sum("se_var") / F.sum(F.col("k"))), 4).alias("rmse_var"),
         )
-
-    per_slice = rollup(errs.groupBy("slice")).join(loss_df, "slice")
-    # pooled row: the single-number "does training pay for itself" answer
-    overall = rollup(errs.groupBy(F.lit("ALL").alias("slice"))).select(
-        "slice",
-        "n_test",
-        "rmse_hybrid",
-        "rmse_var",
-        F.lit(None).cast("double").alias("loss_first"),
-        F.lit(None).cast("double").alias("loss_last"),
-    )
-    return (
-        per_slice.select(
-            "slice", "n_test", "rmse_hybrid", "rmse_var", "loss_first", "loss_last"
-        )
-        .unionByName(overall)
+        .withColumn("slice", F.coalesce("slice", F.lit("ALL")))
+        .join(F.broadcast(loss_df), "slice", "left")
         .withColumn("improved", F.col("rmse_hybrid") < F.col("rmse_var"))
         .select(
             "slice",

@@ -8,10 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from fiveg_spark.ml.features import FEATURES, feature_frame, robust_scale, with_split
-from fiveg_spark.ml.hybrid import hybrid_eval
+from fiveg_spark.ml.hybrid import hybrid_eval, hybrid_forecast
 from fiveg_spark.ml.model import forward, init_weights, predict_residuals
 from fiveg_spark.ml.sequences import sliding_sequences
 from fiveg_spark.ml.var import lag_design, normal_equations, solve_coefficients
+from fiveg_spark.plans.explain import plan_facts, simple_plan
 from tests.conftest import SF_DIR
 
 
@@ -120,6 +121,13 @@ def test_short_slice_fails_with_named_value_error(spark, tmp_path):
 
     with pytest.raises(Exception, match=r"ValueError: slice 'URLLC' has no VAR coefficients"):
         hybrid_eval(spark, str(tmp_path)).collect()
+
+
+def test_forecast_compose_plan_scans_no_file(spark):
+    """The scaler params of the inverse scale come from the call's
+    checkpointed hourly frame: composing the forecast re-reads no events."""
+    long = hybrid_forecast(spark, SF_DIR)
+    assert plan_facts(long).n_scans == 0, simple_plan(long)
 
 
 def test_hybrid_eval_surface(spark):

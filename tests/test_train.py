@@ -114,6 +114,31 @@ def test_hybrid_train_eval_beats_var_only(spark):
     assert n_improved >= 2, f"only {n_improved}/3 slices improved"
 
 
+def test_hybrid_train_eval_scores_once_and_pins_no_cache(spark):
+    """One scoring pass feeds the per-slice rows and the pooled ALL row,
+    and the call leaves no relation in the session's cache."""
+    import re
+
+    from fiveg_spark.ml.train import hybrid_train_eval
+    from fiveg_spark.plans.explain import simple_plan
+    from tests.conftest import SF_DIR
+
+    spark.catalog.clearCache()
+    df = hybrid_train_eval(spark, SF_DIR, epochs=1)
+    rows = {r["slice"]: r for r in df.collect()}
+    # the executed plan's own final section (a cached relation nests
+    # its own Final/Initial sections, indented)
+    final = re.split(r"^\+- == Initial Plan ==", simple_plan(df), flags=re.M)[0]
+    assert final.count("MapInPandas") == 1, final
+    assert set(rows) == {"eMBB", "URLLC", "mMTC", "ALL"}
+    assert rows["ALL"]["n_test"] == sum(
+        rows[s]["n_test"] for s in ("eMBB", "URLLC", "mMTC")
+    )
+    assert rows["ALL"]["loss_first"] is None
+    assert all(rows[s]["loss_first"] is not None for s in ("eMBB", "URLLC", "mMTC"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_weight_save_load_round_trip(spark, tmp_path):
     """The weight-row frame round-trips through parquet bit-exactly and
     the reloaded pytree drives the same predictions."""
